@@ -140,6 +140,10 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf),
+        # a query that fails every pass only shrinks ``value``; these make
+        # failures and cross-pass row-count drift visible on stdout
+        "n_errors": len(errors),
+        "n_mismatches": len(row_count_mismatches),
     }
     full_payload = {
         **payload,

@@ -133,13 +133,18 @@ def _edge_fingerprint(e: DataFrame):
     probe.  Two scalar aggregates; no edge table ever reaches the
     driver.
 
-    PRECONDITION (both call sites satisfy it): ``e`` is already DISTINCT
-    and consistently oriented — the initial edge set is distinct with
-    u < v, every post-round set is small-star output, distinct with
-    u > v — so no two rows canonicalize to the same (hi, lo) and the
-    probe needs NO distinct of its own.  (r17, guide §2.4: the explicit
-    ``.distinct()`` here was a set-level no-op that still paid one full
-    extra shuffle per star round, on every round of three query paths.)"""
+    PRECONDITION (both call sites in ``_distributed_star`` satisfy it):
+    ``e`` is already DISTINCT and consistently oriented u > v — the
+    initial edge set is canonicalized to u > v and made distinct, and
+    every post-round set is small-star output (u > v by construction)
+    made distinct by the round loop's own ``.distinct()`` — so no two
+    rows canonicalize to the same (hi, lo) and the probe needs NO
+    distinct of its own.  That loop ``.distinct()`` is what makes the
+    precondition hold: small-star output can repeat an edge, and a
+    repeated row would skew the count and cancel out of the XOR.
+    (r17, guide §2.4: an explicit ``.distinct()`` here was a set-level
+    no-op that still paid one full extra shuffle per star round, on
+    every round of three query paths.)"""
     canon = e.select(
         F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo")
     )

@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import hashlib
 import heapq
-import json
 import math
 from pathlib import Path
 from typing import Sequence
@@ -46,6 +45,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import build_once
 from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors
 from ..functions.vector import neo4j_score, vector_lit
 from ..registry import register
@@ -185,14 +185,21 @@ def _train_graph(
     return nodes, build_knn_graph(nodes)
 
 
-_GRAPH_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "graphann"
+def _graph_entry(spark: SparkSession, sf_dir: str) -> tuple[Path, dict]:
+    """Persisted graph-ANN index: ``node_id``-partitioned layout under
+    ``data/``; routing nodes and adjacency in the metadata."""
 
+    def build(work: Path) -> dict:
+        emb = load_table(spark, sf_dir, "embeddings")
+        nodes, graph = _train_graph(emb)
+        assigned = emb.withColumn("node_id", assignment_expr(nodes))
+        assigned.repartition("node_id").write.partitionBy("node_id").parquet(
+            str(work / "data")
+        )
+        return {"nodes": nodes, "graph": graph}
 
-def _graph_cache_dir(sf_dir: str) -> Path:
-    tag = hashlib.md5(
-        f"{sf_dir}:{GRAPH_NODES}:{GRAPH_DEGREE}:{TRAIN_SAMPLE}:v2".encode()
-    ).hexdigest()[:12]
-    return _GRAPH_CACHE_ROOT / tag
+    params = {"nodes": GRAPH_NODES, "degree": GRAPH_DEGREE, "sample": TRAIN_SAMPLE}
+    return build_once("graphann", sf_dir, ["embeddings"], params, build)
 
 
 def load_or_build_graph_index(
@@ -200,22 +207,9 @@ def load_or_build_graph_index(
 ) -> tuple[DataFrame, list[list[float]], list[list[int]]]:
     """Build-once/query-many graph-ANN layout: (index df, nodes, graph).
     The layout is ``node_id``-partitioned parquet — the same
-    partition-pruning contract as the IVF family; metadata is written
-    LAST so a half-built cache is never read."""
-    root = _graph_cache_dir(sf_dir)
-    meta, data = root / "meta.json", root / "data"
-    if meta.exists():
-        m = json.loads(meta.read_text())
-        return spark.read.parquet(str(data)), m["nodes"], m["graph"]
-    emb = load_table(spark, sf_dir, "embeddings")
-    nodes, graph = _train_graph(emb)
-    assigned = emb.withColumn("node_id", assignment_expr(nodes))
-    assigned.repartition("node_id").write.mode("overwrite").partitionBy(
-        "node_id"
-    ).parquet(str(data))
-    meta.parent.mkdir(parents=True, exist_ok=True)
-    meta.write_text(json.dumps({"nodes": nodes, "graph": graph}))
-    return spark.read.parquet(str(data)), nodes, graph
+    partition-pruning contract as the IVF family."""
+    entry, m = _graph_entry(spark, sf_dir)
+    return spark.read.parquet(str(entry / "data")), m["nodes"], m["graph"]
 
 
 def graph_topk(
@@ -751,7 +745,8 @@ def q_ann_hnsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .ann import replace_partitions
 
-    _, nodes, _ = load_or_build_graph_index(spark, sf_dir)
+    entry, meta = _graph_entry(spark, sf_dir)
+    nodes = meta["nodes"]
     emb = load_table(spark, sf_dir, "embeddings")
     fixed = {
         r["vec_id"]: [float(v) for v in r["embedding"]]
@@ -767,13 +762,13 @@ def q_ann_hnsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_hnsw_incremental(nodes), all_nodes, len(nodes)
     )
 
-    # base layout: a FILESYSTEM clone of the build-once cached index
-    # (same nodes, same assignment) — the shared cache must not be
+    # base layout: a FILESYSTEM clone of the persisted index entry
+    # (same nodes, same assignment) — a published entry must not be
     # mutated by a query run, and cloning files costs IO proportional
     # to the index, never a recompute of the assignment pass
     layout = tempfile.mkdtemp(prefix="hnsw_upsert_")
     shutil.rmtree(layout)
-    shutil.copytree(_graph_cache_dir(sf_dir) / "data", layout)
+    shutil.copytree(entry / "data", layout)
 
     stored = spark.read.parquet(layout)
     # movers: vectors a NEW node wins (assignment over the superset

@@ -40,8 +40,6 @@ same discipline as pq.py/functions/train.py.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import math
 from pathlib import Path
 from typing import Sequence
@@ -50,6 +48,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import build_once
 from ..functions.train import (
     ORACLE_SF_DIR,
     kmeans,
@@ -72,14 +71,13 @@ from .pq import (
     SUB_DIM,
     TRAIN_SAMPLE,
     _codeword_norms2,
+    _sorted_sample,
 )
 from .topk import QUERY_VEC_ID, SCORE_DECIMALS
 
 SEED = 77
 DIM = 64
 ROT_DECIMALS = 12  # rounding for rotated coordinates (both engines)
-
-_OPQ_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "opq"
 
 
 def _train_rotation(sample_unit: np.ndarray) -> list[list[float]]:
@@ -149,37 +147,23 @@ def _rotated_unit(rot) -> F.Column:
     )
 
 
-def _cache_paths(sf_dir: str, seed: int) -> tuple[Path, Path]:
-    tag = hashlib.md5(
-        f"{sf_dir}:{M_SUBSPACES}:{K_CODEWORDS}:{TRAIN_SAMPLE}:{seed}:v1".encode()
-    ).hexdigest()[:12]
-    root = _OPQ_CACHE_ROOT / tag
-    return root / "meta.json", root / "data"
-
-
 def load_or_build_opq_index(spark: SparkSession, sf_dir: str, seed: int = SEED):
     """Build-once/query-many OPQ codes: (codes_df, rotation, books)."""
-    meta, data = _cache_paths(sf_dir, seed)
-    if meta.exists():
-        m = json.loads(meta.read_text())
-        return spark.read.parquet(str(data)), m["rot"], m["books"]
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.orderBy("vec_id").limit(TRAIN_SAMPLE).select("vec_id", "embedding").collect()
-    )
-    ids = [int(r["vec_id"]) for r in rows]
-    vecs = [[float(x) for x in r["embedding"]] for r in rows]
-    rot, books = _train_opq(vecs, seed)
-    rotated = emb.select("vec_id", _rotated_unit(rot).alias("__unit"))
-    # pq._encode is parameterized by codebooks and reads the ``__unit``
-    # column — the identical nearest-codeword stage, reused verbatim
-    pq_encode(rotated, books).write.mode("overwrite").parquet(str(data))
-    meta.write_text(
-        json.dumps(
-            {"rot": rot, "books": books, "sample_ids": ids, "sample_vecs": vecs}
-        )
-    )
-    return spark.read.parquet(str(data)), rot, books
+
+    def build(work: Path) -> dict:
+        emb = load_table(spark, sf_dir, "embeddings")
+        _, vecs = _sorted_sample(emb)
+        rot, books = _train_opq(vecs, seed)
+        rotated = emb.select("vec_id", _rotated_unit(rot).alias("__unit"))
+        # pq._encode is parameterized by codebooks and reads the ``__unit``
+        # column — the identical nearest-codeword stage, reused verbatim
+        pq_encode(rotated, books).write.parquet(str(work / "data"))
+        return {"rot": rot, "books": books}
+
+    params = {"m": M_SUBSPACES, "k": K_CODEWORDS, "sample": TRAIN_SAMPLE,
+              "iters": KMEANS_ITERS, "rot_decimals": ROT_DECIMALS, "seed": seed}
+    entry, m = build_once("opq", sf_dir, ["embeddings"], params, build)
+    return spark.read.parquet(str(entry / "data")), m["rot"], m["books"]
 
 
 def _rot_apply(rot, q: Sequence[float]) -> list[float]:
@@ -333,7 +317,7 @@ def q_ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     RERANK_POOL rows of floats."""
     codes, rot, books = load_or_build_opq_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    # query vector via the shared PQ-cache helper (same json float
-    # round-trip guarantees) instead of re-parsing this module's meta
+    # query vector from the PQ index's training sample (same json float
+    # round-trip guarantees); OPQ's own metadata keeps only its model
     qvec = cached_query_vector(spark, sf_dir)
     return opq_adc_topk(codes, emb, rot, books, qvec)

@@ -29,7 +29,7 @@ query so the technique is exercised, not just described.
 
 from __future__ import annotations
 
-import hashlib
+import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,18 +38,12 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources.tables import load_table, spread
-from ..cache import scratch_persist
+from ..cache import build_once, scratch_persist
 
 N_SALTS = 16
 PRICE_BIN = 5000.0
 N_BUCKETS = 8
 R = 6
-
-# Bucketed layouts are ingest-time artifacts reused across queries
-# (same build-once/query-many discipline as the IVF index cache in
-# operators/ann.py — the reference likewise creates its index via DDL
-# once, reference README.md:72-79, and only reads it per query).
-_BUCKET_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "bucketed"
 
 
 def _ddl(df: DataFrame) -> str:
@@ -60,32 +54,43 @@ def load_or_build_bucketed(
     spark: SparkSession, sf_dir: str, table: str, key: str, n_buckets: int = N_BUCKETS
 ) -> DataFrame:
     """Return ``table`` from ``sf_dir`` as a bucketed+sorted catalog
-    table, writing the layout on first use and re-attaching the
-    existing files via DDL (cheap) on later sessions.
+    table, writing the layout once as a persisted index and
+    re-attaching the existing files via DDL (cheap) in later sessions.
 
     The bucket spec lives in table metadata, so a fresh session must
     re-register it — but re-registration is a CREATE TABLE over the
-    already-written files, not a re-shuffle of the data.  A `_SUCCESS`
-    marker gates reuse so a half-written layout is never attached.
+    already-written files, not a re-shuffle of the data.  The build
+    writes through a throwaway external table, so the catalog only
+    ever points at the published entry.
     """
-    tag = hashlib.md5(f"{sf_dir}:{table}:{key}:{n_buckets}:v1".encode()).hexdigest()[:12]
-    name = f"bucketed_{table}_{tag}"
-    if spark.catalog.tableExists(name):
-        return spark.table(name)
-    path = _BUCKET_CACHE_ROOT / tag
-    df = load_table(spark, sf_dir, table)
-    if (path / "_SUCCESS").exists():
-        spark.sql(
-            f"CREATE TABLE {name} ({_ddl(df)}) USING PARQUET "
-            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS "
-            f"LOCATION '{path}'"
-        )
-    else:
+
+    def build(work: Path) -> dict:
+        scratch = f"bucketed_build_{uuid.uuid4().hex}"
         (
-            df.write.bucketBy(n_buckets, key).sortBy(key)
-            .option("path", str(path)).mode("overwrite")
-            .saveAsTable(name)
+            load_table(spark, sf_dir, table)
+            .write.bucketBy(n_buckets, key).sortBy(key)
+            .option("path", str(work / "data"))
+            .saveAsTable(scratch)
         )
+        spark.sql(f"DROP TABLE {scratch}")  # external: the files stay
+        return {}
+
+    params = {"key": key, "n_buckets": n_buckets}
+    entry, _ = build_once("bucketed", sf_dir, [table], params, build)
+    # the catalog name is stable; the table's comment names the entry it
+    # is attached to, so a changed input re-attaches instead of reading
+    # the old entry
+    name = f"bucketed_{table}"
+    if spark.catalog.tableExists(name):
+        if spark.catalog.getTable(name).description == entry.name:
+            return spark.table(name)
+        spark.sql(f"DROP TABLE {name}")
+    ddl = _ddl(load_table(spark, sf_dir, table))
+    spark.sql(
+        f"CREATE TABLE {name} ({ddl}) USING PARQUET "
+        f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS "
+        f"LOCATION '{entry / 'data'}' COMMENT '{entry.name}'"
+    )
     return spark.table(name)
 
 
@@ -537,25 +542,23 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DPP_DIM_ROWS = [("R", "returned"), ("A", "accepted"), ("N", "none")]
-_DPP_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "dpp"
 
 
 def _dpp_layout(spark: SparkSession, sf_dir: str) -> str:
     """Build-once l_returnflag-partitioned lineitem layout (the
     partitioned-fact precondition DPP prunes against)."""
-    tag = hashlib.md5(f"{sf_dir}:dpp:v1".encode()).hexdigest()[:12]
-    root = _DPP_CACHE_ROOT / tag
-    data, marker = root / "data", root / "_done"
-    if not marker.exists():
+
+    def build(work: Path) -> dict:
         li = load_table(spark, sf_dir, "lineitem")
         li.select(
             "l_orderkey", "l_extendedprice", "l_returnflag"
-        ).repartition("l_returnflag").write.mode("overwrite").partitionBy(
-            "l_returnflag"
-        ).parquet(str(data))
-        marker.parent.mkdir(parents=True, exist_ok=True)
-        marker.write_text("ok")
-    return str(data)
+        ).repartition("l_returnflag").write.partitionBy("l_returnflag").parquet(
+            str(work / "data")
+        )
+        return {}
+
+    entry, _ = build_once("dpp", sf_dir, ["lineitem"], {}, build)
+    return str(entry / "data")
 
 
 @register(
@@ -583,7 +586,7 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     static pruning and pushdown for free.  Plan-asserted in
     tests/test_plans.py (`dynamicpruningexpression` on the fact scan).
 
-    The fact layout builds once per sf_dir (cached like the IVF index);
+    The fact layout builds once per input (a persisted index, like IVF);
     the dim is a genuinely separate table — DPP does not fire on a
     self-derived dim (Catalyst collapses it), which is itself the
     honest contract: pruning needs an independent filter source."""

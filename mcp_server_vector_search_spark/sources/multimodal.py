@@ -24,7 +24,6 @@ read and nothing downstream depends on how the bytes were obtained.
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -32,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import build_once
 from ..functions.png import decode_png, encode_png, nn_resize
 from ..registry import register
 from .tables import load_table, spread
@@ -1123,9 +1123,6 @@ def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from pathlib import Path as _Path  # noqa: E402
 
-_BINARY_CORPUS_ROOT = (
-    _Path(__file__).resolve().parents[2] / ".cache" / "binary_corpus"
-)
 _BINARY_EXT = {"png": "png", "pgm": "pgm", "jpeg": "jpg", "wav": "wav", "avi": "avi"}
 AVI_EVERY = 5  # every 5th document also gets an MJPEG-AVI clip
 
@@ -1133,34 +1130,32 @@ AVI_EVERY = 5  # every 5th document also gets an MJPEG-AVI clip
 def _corpus_writer(root: str):
     """mapInPandas stage that writes one real file per row — the
     executor-side write half of the seam (object-store put in
-    production).  Emits per-batch file counts so the caller can force
+    production).  Emits per-batch byte counts so the caller can force
     execution with a tiny aggregate."""
 
     def write_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = 0
+            n_bytes = 0
             for d, fmt, payload in zip(
                 pdf["doc_id"], pdf["fmt"], pdf["payload"]
             ):
                 kind = {"wav": "aud", "avi": "vid"}.get(fmt, "img")
                 name = f"doc_{int(d):08d}_{kind}.{_BINARY_EXT[fmt]}"
-                (_Path(root) / name).write_bytes(bytes(payload))
-                n += 1
-            yield pd.DataFrame({"n_written": [n]})
+                body = bytes(payload)
+                (_Path(root) / name).write_bytes(body)
+                n_bytes += len(body)
+            yield pd.DataFrame({"n_bytes": [n_bytes]})
 
     return write_batches
 
 
-def binary_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once real-file corpus for ``sf_dir``: one image per
-    document (PNG/PGM/JPEG by doc_id % 3), one WAV per document, and
-    one MJPEG-AVI clip per AVI_EVERY-th document — all four modalities
-    on the real-file read path."""
-    tag = hashlib.md5(f"{sf_dir}:binary_corpus:v2".encode()).hexdigest()[:12]
-    root = _BINARY_CORPUS_ROOT / tag
-    data, marker = root / "data", root / "_done"
-    if not marker.exists():
-        data.mkdir(parents=True, exist_ok=True)
+def _binary_corpus(spark: SparkSession, sf_dir: str) -> tuple[_Path, dict]:
+    """Persisted real-file corpus: files under ``data/``; the writers'
+    byte total in the metadata."""
+
+    def build(work: _Path) -> dict:
+        data = work / "data"
+        data.mkdir()
         docs = load_table(spark, sf_dir, "documents")
         imgs = attach_mixed_payload(docs)
         wavs = attach_wav_payload(docs).select(
@@ -1169,14 +1164,25 @@ def binary_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
         avis = attach_avi_payload(
             docs.where(F.col("doc_id") % AVI_EVERY == 0)
         ).select("doc_id", F.lit("avi").alias("fmt"), "payload")
-        written = (
+        n_bytes = (
             imgs.unionByName(wavs).unionByName(avis)
-            .mapInPandas(_corpus_writer(str(data)), schema="n_written long")
-            .agg(F.sum("n_written").alias("n"))
-            .first()["n"]
+            .mapInPandas(_corpus_writer(str(data)), schema="n_bytes long")
+            .agg(F.sum("n_bytes").alias("b"))
+            .first()["b"]
         )
-        marker.write_text(str(written))
-    return str(data)
+        return {"n_bytes": int(n_bytes)}
+
+    params = {"avi_every": AVI_EVERY}
+    return build_once("binary_corpus", sf_dir, ["documents"], params, build)
+
+
+def binary_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Build-once real-file corpus for ``sf_dir``: one image per
+    document (PNG/PGM/JPEG by doc_id % 3), one WAV per document, and
+    one MJPEG-AVI clip per AVI_EVERY-th document — all four modalities
+    on the real-file read path."""
+    entry, _ = _binary_corpus(spark, sf_dir)
+    return str(entry / "data")
 
 
 @register(
@@ -1244,7 +1250,7 @@ def q_multimodal_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     a dropped file, or any codec bug breaks the value hash.  At 100 TB
     the binaryFile scan parallelizes by file across executors and the
     decode stays in the same Arrow-batched mapInPandas slot."""
-    root = binary_corpus_dir(spark, sf_dir)
+    entry, meta = _binary_corpus(spark, sf_dir)
     # Scale-adaptive task sizing (r17, guide §6/§2.2): binaryFile charges
     # every file spark.sql.files.openCostInBytes (4 MB) when packing
     # splits, so thousands of tiny fixture files exploded into ~344 scan
@@ -1252,23 +1258,23 @@ def q_multimodal_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured: a TRIVIAL mapInPandas over the scan cost 3.27 s at 344
     # tasks vs 0.57 s at 32).  Coalesce (no shuffle) to the BYTE-derived
     # partition count — total corpus bytes / 128 MB, floored at the
-    # session's parallelism — which leaves real large corpora untouched
-    # (their byte-derived count exceeds the scan's) and only collapses
-    # the open-cost padding.  The byte total is driver-side metadata
-    # over the operator's own local corpus dir, no Spark job.
-    corpus_bytes = sum(e.stat().st_size for e in os.scandir(root))
+    # session's parallelism; a no-shuffle coalesce never raises the
+    # count, so real large corpora keep their scan.  The byte total is
+    # build-time index metadata: no listing, no RDD call (ADVICE r17).
     target_parts = max(
         spark.sparkContext.defaultParallelism,
-        -(-corpus_bytes // (128 * 1024 * 1024)),
+        -(-meta["n_bytes"] // (128 * 1024 * 1024)),
     )
-    files = spark.read.format("binaryFile").load(root)
-    if target_parts < files.rdd.getNumPartitions():
-        files = files.coalesce(target_parts)
-    files = files.select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)_", 1)
-        .cast("long")
-        .alias("doc_id"),
-        "content",
+    files = (
+        spark.read.format("binaryFile")
+        .load(str(entry / "data"))
+        .coalesce(target_parts)
+        .select(
+            F.regexp_extract(F.col("path"), r"doc_(\d+)_", 1)
+            .cast("long")
+            .alias("doc_id"),
+            "content",
+        )
     )
 
     def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -19,8 +19,10 @@ truth instead of against another implementation:
   cluster-mate cosine ≈ 0.6, below the similarity thresholds) plus
   200 planted near-identical vector pairs (cosine ≈ 0.999).
 
-The fixed path keeps the build-once index caches (IVF/IVF-PQ tag on
-sf_dir) stable across pytest runs.
+The corpus is written once and then left alone, so its files keep
+their sizes and mtimes and the persisted indexes built over it
+(``cache.build_once`` keys on those) stay valid across pytest runs;
+rewriting it makes them rebuild.
 """
 
 from __future__ import annotations

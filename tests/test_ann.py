@@ -80,22 +80,23 @@ def test_hash_embedder_deterministic(spark):
     assert all(abs(sum(x * x for x in r.v) - 1.0) < 1e-3 for r in e1)
 
 
-def test_ivf_index_cache_roundtrip(spark):
+def test_ivf_index_cache_roundtrip(spark, tmp_path, monkeypatch):
     """load_or_build builds once, then serves the SAME layout from the
-    cached partition-pruned parquet — second call must not retrain."""
-    import shutil
+    persisted partition-pruned parquet — second call must not retrain
+    or rewrite the entry."""
+    from mcp_server_vector_search_spark import cache
+    from mcp_server_vector_search_spark.operators.ann import load_or_build_ivf_index
 
-    from mcp_server_vector_search_spark.operators.ann import (
-        _INDEX_CACHE_ROOT,
-        load_or_build_ivf_index,
-    )
-
-    shutil.rmtree(_INDEX_CACHE_ROOT, ignore_errors=True)
+    monkeypatch.setattr(cache, "STORE_ROOT", tmp_path)
     idx1, cent1 = load_or_build_ivf_index(spark, SF_CORRECTNESS)
-    cached_dirs = list(_INDEX_CACHE_ROOT.iterdir())
+    cached_dirs = list((tmp_path / "ivf").iterdir())
     assert len(cached_dirs) == 1
+    meta = cached_dirs[0] / "meta.json"
+    before = meta.stat().st_mtime_ns
     idx2, cent2 = load_or_build_ivf_index(spark, SF_CORRECTNESS)
     assert cent1 == cent2
+    assert meta.stat().st_mtime_ns == before
+    assert list((tmp_path / "ivf").iterdir()) == cached_dirs
     a = {(r.vec_id, r.centroid_id) for r in idx1.collect()}
     b = {(r.vec_id, r.centroid_id) for r in idx2.collect()}
     assert a == b and len(a) > 0

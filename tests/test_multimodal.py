@@ -231,8 +231,9 @@ def test_binaryfile_scan_reads_real_files(spark):
     plan = formatted_plan(df)
     assert "binaryfile" in plan.lower()
     assert df.count() == 2 * n_docs + n_avi
-    # build-once: second call must not rewrite (marker mtime unchanged)
-    marker = root.parent / "_done"
+    # build-once: second call must not rewrite (the published entry's
+    # meta.json mtime is unchanged)
+    marker = root.parent / "meta.json"
     before = marker.stat().st_mtime_ns
     binary_corpus_dir(spark, sf)
     assert marker.stat().st_mtime_ns == before
